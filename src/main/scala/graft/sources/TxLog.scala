@@ -920,20 +920,51 @@ object TxLog {
     * add-actions — no remove, no data movement. Null-keyed update rows
     * match nothing (SQL join semantics) and are appended as inserts. The
     * rewritten output re-records stats on `keyCol`, so merges keep pruning
-    * against merged output. */
+    * against merged output.
+    *
+    * SCALE shape: `updates` is EVALUATED ONCE per call (see
+    * [[materialized]]) — the key bounds, the touch scan, the preservation
+    * join, the change-data sidecars and the data staging all read the same
+    * materialized rows, and so does every conflict re-derivation. Two
+    * reasons, both load-bearing: a nondeterministic source (a UDF, a
+    * `current_timestamp()`, a racing upstream table) must not land one
+    * value in the data and another in its change feed or in a retry; and
+    * every later pass compiles against a literal-free cache scan, so a
+    * caller whose filter literals change on each merge pays the source's
+    * codegen once, not once per pass. Phase 1 is a driver-side loop over
+    * the log's stats (no Spark job); phase 2 is one key-column scan of the
+    * candidates under the log schema (no schema-inference job). */
   /** Full merge derivations since JVM start (each = the two-phase file
     * scoping + distributed rewrite). Test instrumentation for
     * disjoint-commit admission: an admitted conflict re-commits the SAME
     * actions and must NOT increment this. */
   private[graft] val mergeDerivations = new java.util.concurrent.atomic.AtomicLong
 
-  /** Test hook, invoked just before each merge commit attempt (lets a spec
-    * deterministically interleave a concurrent commit). */
+  /** Test hook, invoked just before each merge (and mergeFull) commit
+    * attempt (lets a spec deterministically interleave a concurrent commit). */
   private[graft] var mergeCommitHook: () => Unit = () => ()
 
   def merge(updates: DataFrame, table: String, keyCol: String,
       maxRetries: Int = 16, mergeSchema: Boolean = false,
-      changeFeed: Boolean = false): Long = {
+      changeFeed: Boolean = false): Long =
+    materialized(updates)(mergeMapped(_, table, keyCol, maxRetries, mergeSchema, changeFeed))
+
+  /** Runs `body` over ONE evaluation of `df` — the merge verbs' source
+    * discipline (Delta materializes its MERGE source the same way). The
+    * frame is persisted MEMORY_AND_DISK, so a large source spills instead of
+    * failing, and every pass and every re-derivation inside `body` reads the
+    * same rows. A plan the caller already cached is used as is and stays
+    * cached; the cache this call creates is released on every exit path, a
+    * throw included. */
+  private def materialized[A](df: DataFrame)(body: DataFrame => A): A =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) body(df)
+    else {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try body(df) finally { df.unpersist(); () }
+    }
+
+  private def mergeMapped(updates: DataFrame, table: String, keyCol: String,
+      maxRetries: Int, mergeSchema: Boolean, changeFeed: Boolean): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
@@ -989,7 +1020,7 @@ object TxLog {
       changeFeed: Boolean = false): Long = {
     val spark = updates.sparkSession
     val keyType = updates.schema(keyCol).dataType
-    import spark.implicits._
+    val tzId = spark.sessionState.conf.sessionLocalTimeZone
     val updKeys = updates.select(col(keyCol).as("__k"))
       .where(col("__k").isNotNull).distinct()
     // typed update-key envelope — drives phase 1 AND conflict admission.
@@ -1008,6 +1039,10 @@ object TxLog {
       mergeDerivations.incrementAndGet()
       val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
       val (liveMap, tip) = (replay.live, replay.tip)
+      // every data read of the derivation is under the LOG schema: touched
+      // files may predate an evolution (null-filling the later columns),
+      // and a pinned schema skips the footer-inference job
+      val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
       val withStats = liveMap.toSeq.flatMap { case (path, line) =>
         parseStatsAll(line).collect { case st if st.col == keyCol => (path, st.min, st.max) }
       }
@@ -1019,29 +1054,16 @@ object TxLog {
           // (conservatively — they might hold anything)
           case None => opaque.toSeq
           case Some((lo, hi)) =>
-            // phase 1: envelope prune — typed bounds against the (small,
-            // O(files)) ranges frame; comparisons happen in the key's own
-            // type, never as strings. try_cast, because a stat string that
-            // does not parse as the key type (older writer, type drift) must
-            // yield null — and a null-cast file must stay a CANDIDATE: it
-            // has stats, so it is not in `opaque`, and dropping it here
-            // would mean it is never rewritten — a silent lost update (plain
-            // cast is just as wrong: under ANSI it aborts the whole merge)
-            val ranges = withStats.toDF("__path", "__mns", "__mxs")
-              .select(col("__path"), col("__mns").try_cast(keyType).as("__mn"),
-                col("__mxs").try_cast(keyType).as("__mx"))
-            val candidates = ranges
-              .where((col("__mx") >= lit(lo) && col("__mn") <= lit(hi)) ||
-                col("__mn").isNull || col("__mx").isNull)
-              .select("__path").collect().map(_.getString(0)).toSeq
-            // phase 2: touch scan — read ONLY the candidates' key column and
-            // equi-join (hash, shuffle-or-broadcast — never a nested loop)
-            // against the update keys to find files holding a real hit
+            // phase 1: envelope prune on the driver (see envelopeCandidates)
+            val candidates = envelopeCandidates(withStats, keyType, lo, hi, tzId)
+            // phase 2: touch scan — read ONLY the candidates' key column
+            // and equi-join (hash, shuffle-or-broadcast — never a nested
+            // loop) against the update keys to find files holding a real hit
             val hit: Set[String] =
               if (candidates.isEmpty) Set.empty
               else {
                 val byAbs = candidates.map(p => normalize(p) -> p).toMap
-                spark.read.parquet(candidates: _*)
+                reader.parquet(candidates: _*)
                   .select(col("_metadata.file_path").as("__fp"), col(keyCol).as("__k"))
                   .join(updKeys, "__k")
                   .select("__fp").distinct().collect()
@@ -1109,9 +1131,7 @@ object TxLog {
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               schemaOf(j)))
-        else readLive(spark,
-          replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j))),
-          touched, replay.live)
+        else readLive(spark, reader, touched, replay.live)
       // table columns the updates frame does not mention (deferred
       // generated columns land here too — the join binds their pre-image)
       val missingCols = current.columns.toSeq.filterNot(tc =>
@@ -1194,12 +1214,42 @@ object TxLog {
       // pays exactly one derivation. Anything unprovable re-derives.
       commitAdmitting(table, tip, actions, "merge", () => mergeCommitHook,
         attempts, maxRetries,
-        v => commitIsDisjoint(table, v, ourRemoves, keyCol, keyType, updBounds,
-          spark.sessionState.conf.sessionLocalTimeZone))
+        v => commitIsDisjoint(table, v, ourRemoves, keyCol, keyType, updBounds, tzId))
         .foreach(v => return v)
       // an unprovable winner: loop re-derives against the fresh tip
     }
     -1L
+  }
+
+  /** The key-envelope prune of the merge verbs (their phase 1) and of
+    * [[readPruned]], on the driver with zero Spark jobs: the files of
+    * `withStats` (path, min, max of the key)
+    * whose recorded envelope may hold a key in [`lo`, `hi`]. Stat strings
+    * re-parse with TRY casts into the key's own type in the session
+    * timezone (the [[StatsSkipping]] discipline), so comparisons are typed,
+    * never lexicographic. A stat that does NOT parse (older writer, type
+    * drift) keeps its file: it has stats, so it is not opaque, and dropping
+    * it would mean it is never rewritten — a silent lost update. */
+  private def envelopeCandidates(withStats: Seq[(String, String, String)],
+      keyType: org.apache.spark.sql.types.DataType, lo: Any, hi: Any,
+      tzId: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val (loL, hiL) = (Literal.create(lo, keyType), Literal.create(hi, keyType))
+    def parsed(stat: String): Option[Literal] =
+      Option(Cast(Literal(stat), keyType, Some(tzId), EvalMode.TRY).eval())
+        .map(Literal(_, keyType))
+    def holds(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+      e.eval() match {
+        case b: java.lang.Boolean => b.booleanValue()
+        case _                    => true // null compare ⇒ conservative keep
+      }
+    withStats.collect {
+      case (path, mn, mx) if ((parsed(mn), parsed(mx)) match {
+        case (Some(a), Some(b)) =>
+          holds(GreaterThanOrEqual(b, loL)) && holds(LessThanOrEqual(a, hiL))
+        case _ => true
+      }) => path
+    }
   }
 
   /** One clause of a full MERGE (the Delta/ANSI MERGE matrix). Conditions
@@ -1241,7 +1291,9 @@ object TxLog {
     * that cost is INHERENT to the sync shape, not an implementation
     * artifact (deciding "is this row missing from the source" requires
     * comparing it); without one, the rewrite set narrows to source-keyed
-    * files exactly like [[merge]] (envelope prune + touch scan).
+    * files exactly like [[merge]] (envelope prune + touch scan). The source
+    * is evaluated ONCE per call, across passes and re-derivations, for the
+    * same determinism and codegen reasons as [[merge]] (see [[materialized]]).
     *
     * Null keys follow SQL join semantics: a null-keyed source row matches
     * nothing (insert candidate); a null-keyed target row matches nothing
@@ -1252,7 +1304,13 @@ object TxLog {
     * inserts) for [[readChangeFeed]]. Returns the committed version. */
   def mergeFull(source: DataFrame, table: String, keyCol: String,
       clauses: Seq[MergeClause], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false): Long = {
+      maxRetries: Int = 16, changeFeed: Boolean = false): Long =
+    materialized(source)(
+      mergeFullMapped(_, table, keyCol, clauses, statsCol, maxRetries, changeFeed))
+
+  private def mergeFullMapped(source: DataFrame, table: String, keyCol: String,
+      clauses: Seq[MergeClause], statsCol: Option[String],
+      maxRetries: Int, changeFeed: Boolean): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
@@ -1323,13 +1381,8 @@ object TxLog {
             case (None, _) => Seq.empty // no non-null source keys
             case (_, ws) if ws.isEmpty => live
             case (Some((lo, hi)), ws) =>
-              import spark.implicits._
-              ws.toDF("__path", "__mns", "__mxs")
-                .select(col("__path"), col("__mns").try_cast(keyType).as("__mn"),
-                  col("__mxs").try_cast(keyType).as("__mx"))
-                .where((col("__mx") >= lit(lo) && col("__mn") <= lit(hi)) ||
-                  col("__mn").isNull || col("__mx").isNull)
-                .select("__path").collect().map(_.getString(0)).toSeq ++ opaque
+              envelopeCandidates(ws, keyType, lo, hi,
+                spark.sessionState.conf.sessionLocalTimeZone) ++ opaque
           }
           if (candidates.isEmpty) Seq.empty
           else {
@@ -1461,6 +1514,7 @@ object TxLog {
       val removes = touched.map(p => s"""{"remove":{"path":${quote(p)}}}""")
       enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "merge")
       try {
+        mergeCommitHook()
         commit(table, replay.tip + 1, adds ++ cdcActs ++ removes, "merge")
         maybeCheckpoint(table, replay.tip + 1)
         return replay.tip + 1
@@ -1599,7 +1653,8 @@ object TxLog {
     }
   }
 
-  /** Distributed TOUCH SCAN shared by DELETE/UPDATE: the files among
+  /** Distributed TOUCH SCAN of the DELETE/UPDATE rewrite paths (the DV
+    * paths touch through [[dvTouch]] instead): the files among
     * `candidates` holding at least one predicate-TRUE **live** row —
     * column-pruned (only the predicate's columns are read), deletion
     * vectors masked (an already-deleted row must not drag its file back
@@ -1621,6 +1676,25 @@ object TxLog {
         .collect()
         .flatMap(r => byAbs.get(normalize(new java.net.URI(r.getString(0)).getPath)))
         .toSeq
+    }
+
+  /** The DV verbs' touch scan: ONE distributed bitmap aggregate over the
+    * predicate-TRUE live rows of `candidates` ([[Dv.bitmapsByFile]]). The
+    * touched files are exactly those that got a non-empty bitmap, so the
+    * candidates are read once — a separate [[touchScan]] first would read
+    * the same files twice. Returns the touched files (log spellings) and
+    * the bitmaps keyed by normalized path. */
+  private def dvTouch(spark: SparkSession,
+      reader: org.apache.spark.sql.DataFrameReader,
+      candidates: Seq[String], live: scala.collection.Map[String, String],
+      predicate: Column): (Seq[String], Map[String, org.roaringbitmap.RoaringBitmap]) =
+    if (candidates.isEmpty) (Seq.empty, Map.empty)
+    else {
+      val bits = Dv.bitmapsByFile(
+        liveRowsWithPos(spark, reader, candidates, live)
+          .where(coalesce(predicate, lit(false)))
+          .select(col("__fp"), col("__idx")))
+      (candidates.filter(p => bits.get(normalize(p)).exists(!_.isEmpty)), bits)
     }
 
   /** Live rows of `files` with their physical position attached: `__fp`
@@ -1690,7 +1764,9 @@ object TxLog {
     *      row-group stats prune the scan at the storage layer (an arbitrary
     *      predicate has no log-stats envelope to prune on; a range delete on
     *      a stats column gets the log-level prune for free via the scan's
-    *      own pushdown);
+    *      own pushdown). With `useDV = true` the per-file deletion bitmap
+    *      aggregate runs over the candidates directly and is itself the
+    *      touch scan: a file is touched iff its bitmap is non-empty;
     *   2. rewrite only the touched files with their KEPT rows (read under
     *      the log schema, so pre-evolution files null-fill); untouched files
     *      keep their add-actions — no remove, no data movement.
@@ -1797,9 +1873,6 @@ object TxLog {
         case None => Set.empty
       }
       deleteCoveredFiles.set(covered.size)
-      val touched = touchScan(spark, reader, candidates.filterNot(covered),
-        replay.live, predicate)
-      if (covered.isEmpty && touched.isEmpty) return replay.tip
       // phase 1.5 (opt-in): DELETION VECTORS — instead of rewriting a
       // touched file without its matching rows, publish a bitmap of the
       // deleted row positions and re-add the file with it: O(deleted rows)
@@ -1807,14 +1880,14 @@ object TxLog {
       // deleted fraction would exceed `dvMaxFraction` falls back to the
       // rewrite (read amplification on every later scan would outweigh the
       // write saving — the same rewrite-when-too-dirty rule Delta applies
-      // at OPTIMIZE). Bitmaps are built DISTRIBUTED (per-file Roaring
-      // aggregate); the driver collects compressed bitmaps, never row ids.
-      val newBits: Map[String, org.roaringbitmap.RoaringBitmap] =
-        if (!useDV || touched.isEmpty) Map.empty
-        else Dv.bitmapsByFile(
-          liveRowsWithPos(spark, reader, touched, replay.live)
-            .where(coalesce(predicate, lit(false)))
-            .select(col("__fp"), col("__idx")))
+      // at OPTIMIZE). The bitmap aggregate IS the touch scan here (see
+      // dvTouch); the rewrite path keeps its cheaper file-only touch scan.
+      val (touched, newBits) =
+        if (useDV) dvTouch(spark, reader, candidates.filterNot(covered),
+          replay.live, predicate)
+        else (touchScan(spark, reader, candidates.filterNot(covered),
+          replay.live, predicate), Map.empty[String, org.roaringbitmap.RoaringBitmap])
+      if (covered.isEmpty && touched.isEmpty) return replay.tip
       val physRows: Map[String, Long] =
         if (!useDV || touched.isEmpty) Map.empty
         else {
@@ -2021,7 +2094,10 @@ object TxLog {
       val candidates = pruneByStats(live, replay, resolvedCond, tzId)
       updateCandidateFiles.set(candidates.size)
       if (candidates.isEmpty) return replay.tip
-      val touched = touchScan(spark, reader, candidates, replay.live, predicate)
+      val (touched, newBits) =
+        if (useDV) dvTouch(spark, reader, candidates, replay.live, predicate)
+        else (touchScan(spark, reader, candidates, replay.live, predicate),
+          Map.empty[String, org.roaringbitmap.RoaringBitmap])
       if (touched.isEmpty) return replay.tip
       // DELETION-VECTOR path (opt-in, ALL-OR-NOTHING per commit): the
       // updated rows append as fresh POSTIMAGE-ONLY files and their old
@@ -2036,9 +2112,6 @@ object TxLog {
       val dvDone: Option[Long] =
         if (!useDV) None
         else {
-          val hits = liveRowsWithPos(spark, reader, touched, replay.live)
-            .where(coalesce(predicate, lit(false)))
-          val newBits = Dv.bitmapsByFile(hits.select(col("__fp"), col("__idx")))
           val recorded = touched.flatMap(p =>
             parseRows(replay.live(p)).map(p -> _)).toMap
           val physRows = recorded ++
@@ -2057,6 +2130,8 @@ object TxLog {
             // postimage rows: assignments apply UNCONDITIONALLY (every row
             // here is predicate-TRUE), projected back to the table schema;
             // generated columns recompute over the post image
+            val hits = readLive(spark, reader, touched, replay.live)
+              .where(coalesce(predicate, lit(false)))
             val post = recomputeGenerated(hits.select(tableSchema.fields.map { f =>
               assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
             }.toSeq: _*), replay.gens)
@@ -2470,31 +2545,16 @@ object TxLog {
     }
     val opaque = r.live.keysIterator.toSet -- withStats.map(_._1)
     if (withStats.isEmpty) return r.live.keysIterator.toSeq
-    // typed envelope test, evaluated DRIVER-SIDE via interpreted Catalyst
-    // expressions (Cast + comparison on literals): same type semantics as
-    // the SQL cast discipline merge's phase-1 uses, but with zero Spark
-    // jobs — a point lookup must not pay a job just to pick its file list,
-    // and at 100k files a local O(files) loop beats planning a local
-    // relation. TRY eval mode: a cast that yields null (malformed stat)
-    // keeps the file — conservative, never wrongly skipped (and under ANSI
-    // a plain cast would throw instead). The timezone is the SESSION's,
-    // matching stageFiles' SQL cast-to-string on the write side — a
-    // hardcoded zone would shift re-parsed timestamp envelopes by the
-    // session offset and silently skip files holding matching rows.
-    import org.apache.spark.sql.catalyst.expressions.{And, Cast, EvalMode, GreaterThanOrEqual, LessThanOrEqual, Literal}
-    val keyType = Literal(lo).dataType
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    def cast(s: String) = Cast(Literal(s), keyType, tz, EvalMode.TRY)
-    def intersects(mn: String, mx: String): Boolean =
-      And(
-        GreaterThanOrEqual(cast(mx), Literal(lo)),
-        LessThanOrEqual(cast(mn), Literal(hi)))
-        .eval() match {
-        case b: java.lang.Boolean => b.booleanValue()
-        case _                    => true // null compare ⇒ conservative keep
-      }
-    val hit = withStats.collect { case (path, mn, mx) if intersects(mn, mx) => path }
-    (hit ++ opaque).toSeq
+    // typed envelope test on the driver (envelopeCandidates): a point
+    // lookup must not pay a job just to pick its file list, and at 100k
+    // files a local O(files) loop beats planning a local relation. The
+    // timezone is the SESSION's, matching stageFiles' SQL cast-to-string on
+    // the write side — a hardcoded zone would shift re-parsed timestamp
+    // envelopes by the session offset and silently skip files holding
+    // matching rows.
+    val keyType = org.apache.spark.sql.catalyst.expressions.Literal(lo).dataType
+    envelopeCandidates(withStats, keyType, lo, hi,
+      spark.sessionState.conf.sessionLocalTimeZone) ++ opaque
   }
 
   /** Roll the table BACK to the state of `version` as a NEW commit (Delta's

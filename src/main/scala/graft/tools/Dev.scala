@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   runMain graft.tools.Dev smoke                 — entry() row count on sf0.001
   *   runMain graft.tools.Dev explain <sfDir> [ids] — explain("formatted") per query
-  *   runMain graft.tools.Dev time <sfDir> <id>     — run one query, print secs + rows
+  *   runMain graft.tools.Dev time <sfDir> <id>     — run one query, print secs, rows, jobs and codegen compiles
   *   runMain graft.tools.Dev pipeline <sfDir> [n]  — end-to-end CorpusPipeline timing
   *   runMain graft.tools.Dev adaptlsh <sfDir> [τ]  — fixed vs adaptive LSH geometry A/B
   *   runMain graft.tools.Dev lshladder <sfDir> [τ] [xK] — candidate-volume ladder at K× the corpus
@@ -95,10 +95,16 @@ object Dev {
           graft.api.Similarity.lastLshShape = None
           graft.ops.ConnectedComponents.lastRounds = None
           val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
+          // Janino compiles this run (codegen cache misses): a count that
+          // stays high on warm runs means literals baked into generated
+          // code change from call to call and force fresh compiles
+          val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+          val c0 = compiles.getCount
           val t0 = System.nanoTime()
           val n = graft.SparkEntry.queries(id)(spark, sfDir).count()
           println(f"$id[$r]: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows, " +
-            s"jobs=${jobs.get - j0} stages=${stages.get - s0} tasks=${tasks.get - k0}")
+            s"jobs=${jobs.get - j0} stages=${stages.get - s0} tasks=${tasks.get - k0} " +
+            s"codegen_compiles=${compiles.getCount - c0}")
           // auto-select observability: which join shape ran and the measured
           // statistic that decided it (operator diagnostics — the lines a
           // 100 TB run greps for)

@@ -77,6 +77,13 @@ object GraftBridge {
     }.getOrElse(df.rdd.getNumPartitions)
   }
 
+  /** Block until every listener event posted so far has been delivered.
+    * The listener bus is asynchronous and its `waitUntilEmpty` is
+    * `private[spark]`; a caller counting the SQL executions or jobs an
+    * action ran drains the bus before reading its counters. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Analyze + wrap a LogicalPlan as a DataFrame — the command-side
     * counterpart of `spark.sql` for a plan captured BEFORE analysis (an
     * INSERT command defers its source query to run time; `Dataset.ofRows`
