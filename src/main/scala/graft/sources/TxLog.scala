@@ -33,7 +33,8 @@ import org.slf4j.LoggerFactory
   * slot is a conditional PUT / if-none-match, on HDFS a rename — documented,
   * not abstracted, since the sandbox has a POSIX fs).
   *
-  * CONCURRENCY rules per operation:
+  * CONCURRENCY rules per operation (every verb commits through the one
+  * protocol documented on [[transact]]):
   *  - `append` is a blind insert: on version conflict it re-reads the log tip
   *    and retries the SAME actions at the next slot — appends never conflict
   *    with anything (Delta's Serializable-for-appends rule).
@@ -475,6 +476,79 @@ object TxLog {
       java.nio.file.StandardOpenOption.READ))(_.force(true))
     catch { case _: java.io.IOException => () }
 
+  /** Version races one verb call may lose before it gives up (see
+    * [[transact]]). */
+  private val MaxCommitRaces = 64
+
+  /** What one derivation inside [[transact]] decided. */
+  private[sources] sealed trait Step[+A]
+
+  /** Commit `actions` at the next slot; `done` maps the committed version to
+    * the verb's result. `admits(v)` proves the winner of version `v`
+    * independent of these actions (see [[transact]]). */
+  private[sources] final case class Publish[+A](actions: Seq[String],
+      done: Long => A, admits: Long => Boolean = _ => false) extends Step[A]
+
+  /** End the verb with `value` and commit nothing. */
+  private[sources] final case class Finish[+A](value: A) extends Step[A]
+
+  /** The common step: commit `actions`, return the committed version. */
+  private def publish(actions: Seq[String],
+      admits: Long => Boolean = _ => false): Step[Long] =
+    Publish(actions, identity, admits)
+
+  /** The commit protocol every write verb runs through (optimistic
+    * concurrency over [[commit]]'s atomic slot claim, the Delta log's
+    * §3.2 shape):
+    *  1. replay the log at its tip and run `derive` on the replay — it
+    *     checks, reads and stages whatever the verb needs and returns a
+    *     [[Step]]: [[Finish]] ends the verb without a commit (a no-op, an
+    *     already-committed batch), [[Publish]] names the actions to commit;
+    *  2. re-read `hook` and call it (a test hook, re-read per attempt so a
+    *     hook that replaces itself stops firing), commit the actions at
+    *     `tip + 1`, and checkpoint on the interval boundary;
+    *  3. on [[VersionConflict]], when the step's `admits` proves every
+    *     winner since its base independent of its actions
+    *     (DISJOINT-COMMIT ADMISSION), the SAME actions re-commit past them —
+    *     the serial history "winners, then us" — without a new derivation;
+    *     otherwise `derive` runs again against the fresh tip.
+    * The budget is [[MaxCommitRaces]] lost slots per call, re-commits and
+    * re-derivations alike; the next loss fails with "`op` lost 64 version
+    * races on `table`". Errors raised inside `derive` (a stale-metadata
+    * refusal, a constraint violation) propagate at once, unretried. Files a
+    * lost attempt staged stay unreferenced and are [[vacuum]]'s to
+    * collect. `op` is the operation the commit records. */
+  private[sources] def transact[A](table: String, op: String,
+      hook: => () => Unit = () => ())(derive: Replay => Step[A]): A = {
+    var races = 0
+    // a published step still waiting for a slot, with the tip it builds on
+    var pending: Option[(Publish[A], Long)] = None
+    while (true) {
+      val (step, base) = pending.getOrElse {
+        val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+        (derive(r), r.tip)
+      }
+      step match {
+        case Finish(value) => return value
+        case p @ Publish(actions, done, admits) =>
+          try {
+            hook()
+            commit(table, base + 1, actions, op)
+            maybeCheckpoint(table, base + 1)
+            return done(base + 1)
+          } catch {
+            case _: VersionConflict =>
+              races += 1
+              if (races > MaxCommitRaces)
+                sys.error(s"$op lost $MaxCommitRaces version races on $table")
+              val tip = latestVersion(table)
+              pending = if ((base + 1 to tip).forall(admits)) Some((p, tip)) else None
+          }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Write `df` as new immutable parquet files under the table's data area
     * and return their add-actions (nothing is visible until a commit
     * references them — a crashed job leaves only unreferenced files for
@@ -656,6 +730,10 @@ object TxLog {
     case _        => None
   }
 
+  /** One remove-action line. */
+  private def removeLine(path: String): String =
+    s"""{"remove":{"path":${quote(path)}}}"""
+
   /** A remove whose file's rows were ALL deleted by the commit (the
     * covered-file fast path) — flagged so the change feed can derive those
     * deletions by reading the immutable removed file, keeping the
@@ -709,12 +787,12 @@ object TxLog {
         .map(_.toString).filter(_.endsWith(".parquet")).toList.sorted
     }
 
-  /** Blind transactional append: stage files once, then claim the next
-    * version slot, retrying past concurrent committers (an append conflicts
-    * with nothing — its actions are version-independent). Returns the
-    * committed version. `statsCol` records per-file min/max of that column
+  /** Blind transactional append: stage files once, then commit them (an
+    * append conflicts with nothing, so a lost race only re-checks the
+    * staged files against the fresh metadata — see [[requireStagedCurrent]]).
+    * Returns the committed version. `statsCol` records per-file min/max of that column
     * in the add-actions so later merges on it can prune their rewrite set. */
-  def append(df: DataFrame, table: String, maxRetries: Int = 64,
+  def append(df: DataFrame, table: String,
       statsCol: Option[String] = None, mergeSchema: Boolean = false,
       partitionBy: Seq[String] = Seq.empty): Long = {
     // the effective partition spec: a partitioned table IMPOSES its
@@ -761,60 +839,56 @@ object TxLog {
     verifyProvidedGenerated(dfP, pre.gens, "append")
     val dfG = computeGenerated(dfP, pre.gens)
     val actions = stageFiles(dfG, table, statsColP, effParts)
-    var attempt = 0
     // CHECK constraints are enforced against the fresh replay's set; the
     // staged-file scan re-runs on retry only if the set changed concurrently
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    transact(table, "append") { r =>
       val cmap = r.cons.toMap
       if (!enforcedFor.contains(cmap)) {
         enforceConstraints(df.sparkSession, actions, r.schema, cmap, "append")
         enforcedFor = Some(cmap)
       }
-      // staged bytes computed/verified under the entry rules — a racing
-      // rule change invalidates them
-      if (r.gens != pre.gens)
-        sys.error(s"append: generated-column rules of $table changed concurrently")
-      // a concurrent overwrite that changed the spec to a DIFFERENT
-      // nonempty partitioning makes the staged layout wrong — fail rather
-      // than commit mixed layouts. (Columns stay in the data, so staged
-      // partitioned files remain valid if the table went UNpartitioned,
-      // and a same-spec racer is obviously fine.)
-      if (r.parts.nonEmpty && r.parts != effParts)
-        sys.error(s"append: partition spec of $table changed concurrently " +
-          s"(staged for (${effParts.mkString(", ")}), now (${r.parts.mkString(", ")}))")
-      // staged physical names were derived from the mapping at entry — a
-      // concurrent rename/drop of a staged column makes them stale (fail
-      // rather than mis-map), but a PURE EXTENSION (concurrent ADD COLUMN
-      // of something else) leaves our staged names valid — proceed, unless
-      // we are extending the mapping ourselves (two extensions of the same
-      // logical name would orphan one physical column; the colmapLine we
-      // would commit was computed against the stale base)
-      if (r.colmap != pre.colmap &&
-          !(mapActs.isEmpty && pre.colmap.forall(r.colmap.contains)))
-        sys.error(s"append: column mapping of $table changed concurrently")
-      val v = r.tip + 1
+      requireStagedCurrent(r, pre, effParts, extendsMapping = mapActs.nonEmpty, table)
       val partActs =
         if (effParts.nonEmpty && r.parts != effParts) Seq(partsLine(effParts))
         else Seq.empty
-      val schemaActs = schemaActions(r, dfP, mergeSchema, "append")
-      try { commit(table, v, actions ++ partActs ++ schemaActs ++ mapActs, "append"); maybeCheckpoint(table, v); return v }
-      catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"append lost $maxRetries version races on $table")
-      }
+      publish(actions ++ partActs ++ schemaActions(r, dfP, mergeSchema, "append") ++ mapActs)
     }
-    -1L // unreachable
+  }
+
+  /** The staleness rule of the stage-once appends ([[append]],
+    * [[appendIdempotent]]): files staged under `pre`'s metadata are still
+    * committable at the fresh replay `r` unless a racer changed what they
+    * were computed or laid out under.
+    *  - Generated-column rules: the staged bytes were computed and verified
+    *    under the entry rules.
+    *  - Partition spec: a DIFFERENT nonempty spec than `parts` (the layout
+    *    the files were staged for) would mix layouts. Columns stay in the
+    *    data, so the files remain valid if the table went UNpartitioned,
+    *    and a same-spec racer is obviously fine.
+    *  - Column mapping: a rename/drop of a staged column makes the staged
+    *    physical names stale, but a PURE EXTENSION (a concurrent ADD COLUMN
+    *    of something else) leaves them valid — unless the write
+    *    `extendsMapping` itself (two extensions of the same logical name
+    *    would orphan one physical column; its colmap line was computed
+    *    against the stale base). */
+  private def requireStagedCurrent(r: Replay, pre: Replay, parts: Seq[String],
+      extendsMapping: Boolean, table: String): Unit = {
+    if (r.gens != pre.gens)
+      sys.error(s"append: generated-column rules of $table changed concurrently")
+    if (r.parts.nonEmpty && r.parts != parts)
+      sys.error(s"append: partition spec of $table changed concurrently " +
+        s"(staged for (${parts.mkString(", ")}), now (${r.parts.mkString(", ")}))")
+    if (r.colmap != pre.colmap &&
+        (extendsMapping || !pre.colmap.forall(r.colmap.contains)))
+      sys.error(s"append: column mapping of $table changed concurrently")
   }
 
   /** Transactional full overwrite: new files in, every live file of the
-    * snapshot it replaces out, one commit. On conflict the remove-set is
-    * re-derived against the new tip (optimistic retry), so a concurrent
-    * append is never silently dropped from the removal list. */
-  def overwrite(df: DataFrame, table: String, maxRetries: Int = 64,
+    * snapshot it replaces out, one commit. The remove-set is derived at the
+    * tip each attempt commits on, so a concurrent append is never silently
+    * dropped from the removal list. */
+  def overwrite(df: DataFrame, table: String,
       statsCol: Option[String] = None,
       partitionBy: Seq[String] = Seq.empty): Long = {
     // COLUMN MAPPING boundary: an overwrite ADOPTS the writer's column set
@@ -854,10 +928,8 @@ object TxLog {
     // an overwrite replaces every row, so it ADOPTS the writer's partition
     // spec outright (like its schema) — including dropping to unpartitioned
     val adds = stageFiles(dfG, table, statsColP, partitionByP)
-    var attempt = 0
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r0 = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    transact(table, "overwrite") { r0 =>
       if (r0.colmap != pre.colmap)
         sys.error(s"overwrite: column mapping of $table changed concurrently")
       val cmap = r0.cons.toMap
@@ -873,35 +945,26 @@ object TxLog {
       }
       if (r0.gens != pre.gens)
         sys.error(s"overwrite: generated-column rules of $table changed concurrently")
-      val snap = Snapshot(r0.tip, r0.live.keysIterator.toSeq, r0.schema)
-      val removes = snap.files.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+      val removes = r0.live.keysIterator.map(removeLine).toSeq
       // an overwrite replaces every row, so it ADOPTS the writer's schema
       // outright (Delta's overwriteSchema shape) — no null-filling risk
       val schemaActs =
-        if (snap.schemaJson.contains(dfG.schema.json) ||
-            (snap.schemaJson.isEmpty && snap.version > 0)) Seq.empty
+        if (r0.schema.contains(dfG.schema.json) ||
+            (r0.schema.isEmpty && r0.tip > 0)) Seq.empty
         else Seq(schemaLine(dfG.schema.json))
       val partActs =
         if (r0.parts == partitionByP) Seq.empty else Seq(partsLine(partitionByP))
       val mapActs =
         if (mapNow == r0.colmap) Seq.empty else Seq(colmapLine(mapNow))
-      try { commit(table, snap.version + 1, adds ++ removes ++ schemaActs ++ partActs ++ mapActs, "overwrite"); maybeCheckpoint(table, snap.version + 1); return snap.version + 1 }
-      catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"overwrite lost $maxRetries version races on $table")
-      }
+      publish(adds ++ removes ++ schemaActs ++ partActs ++ mapActs)
     }
-    -1L
   }
 
   /** Transactional upsert (MERGE semantics of the `upsert_snapshot` catalog
     * entry): rows of `updates` replace same-key rows of the current
-    * snapshot, new keys insert. On a version conflict the merge re-commits
-    * its SAME actions when every winning commit is provably disjoint (see
-    * the admission note in the loop below) and re-derives against the new
-    * tip otherwise, so the committed history is serializable either way.
+    * snapshot, new keys insert. A winner of the commit slot that is
+    * provably disjoint from the merge (see [[commitIsDisjoint]]) is
+    * admitted: the SAME actions re-commit past it.
     *
     * FILE-SCOPED REWRITE (the production MERGE shape — Delta/Iceberg do the
     * same two-phase find-touched-files dance): instead of rewriting the
@@ -945,9 +1008,8 @@ object TxLog {
   private[graft] var mergeCommitHook: () => Unit = () => ()
 
   def merge(updates: DataFrame, table: String, keyCol: String,
-      maxRetries: Int = 16, mergeSchema: Boolean = false,
-      changeFeed: Boolean = false): Long =
-    materialized(updates)(mergeMapped(_, table, keyCol, maxRetries, mergeSchema, changeFeed))
+      mergeSchema: Boolean = false, changeFeed: Boolean = false): Long =
+    materialized(updates)(mergeMapped(_, table, keyCol, mergeSchema, changeFeed))
 
   /** Runs `body` over ONE evaluation of `df` — the merge verbs' source
     * discipline (Delta materializes its MERGE source the same way). The
@@ -964,11 +1026,11 @@ object TxLog {
     }
 
   private def mergeMapped(updates: DataFrame, table: String, keyCol: String,
-      maxRetries: Int, mergeSchema: Boolean, changeFeed: Boolean): Long = {
+      mergeSchema: Boolean, changeFeed: Boolean): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
-      return merge0(updates, table, keyCol, maxRetries, mergeSchema, changeFeed)
+      return merge0(updates, table, keyCol, mergeSchema, changeFeed)
     // COLUMN MAPPING boundary: translate the updates frame and key to
     // physical names. Unknown logical columns evolve mapping + schema as a
     // SEPARATE prior metadata commit (same observable history as ALTER ADD
@@ -976,7 +1038,7 @@ object TxLog {
     val resolver = updates.sparkSession.sessionState.conf.resolver
     val m = extendMappingFor(updates, table, pre, mergeSchema, "merge")
     merge0(toPhysicalDf(updates, m, "merge"), table,
-      physFor(m, keyCol, resolver, "merge"), maxRetries, mergeSchema, changeFeed)
+      physFor(m, keyCol, resolver, "merge"), mergeSchema, changeFeed)
   }
 
   /** Mapping that covers every column of `df`, committing an evolution
@@ -990,9 +1052,7 @@ object TxLog {
     if (!mergeSchema) throw new SchemaMismatch(
       s"$op: new column(s) ${unknown.map(_.name).mkString(", ")} not in the " +
         "table schema — pass mergeSchema = true to evolve it")
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    transact(table, "alter") { r =>
       if (r.colmap != pre.colmap)
         sys.error(s"$op: column mapping of $table changed concurrently")
       val m = unknown.foldLeft(r.colmap)((acc, f) =>
@@ -1002,22 +1062,12 @@ object TxLog {
       }
       val newSchema = org.apache.spark.sql.types.StructType(
         r.schema.map(schemaOf).map(_.fields).getOrElse(Array.empty) ++ physFields)
-      try {
-        commit(table, r.tip + 1,
-          Seq(colmapLine(m), schemaLine(newSchema.json)), "alter")
-        return m
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > 16) sys.error(s"$op lost 16 version races on $table")
-      }
+      Publish(Seq(colmapLine(m), schemaLine(newSchema.json)), _ => m)
     }
-    Seq.empty // unreachable
   }
 
   private def merge0(updates: DataFrame, table: String, keyCol: String,
-      maxRetries: Int = 16, mergeSchema: Boolean = false,
-      changeFeed: Boolean = false): Long = {
+      mergeSchema: Boolean, changeFeed: Boolean): Long = {
     val spark = updates.sparkSession
     val keyType = updates.schema(keyCol).dataType
     val tzId = spark.sessionState.conf.sessionLocalTimeZone
@@ -1034,11 +1084,9 @@ object TxLog {
     // so unlike append there is nothing stale to abort over; committing
     // values checked against superseded rules would violate the NEW rule)
     var verifiedGens: Option[scala.collection.Map[String, String]] = None
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+    transact(table, "merge", mergeCommitHook) { replay =>
       mergeDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      val (liveMap, tip) = (replay.live, replay.tip)
+      val liveMap = replay.live
       // every data read of the derivation is under the LOG schema: touched
       // files may predate an evolution (null-filling the later columns),
       // and a pinned schema skips the footer-inference job
@@ -1193,7 +1241,7 @@ object TxLog {
         }
       val actions = stageFiles(merged, table, statsCol = Some(keyCol),
         partitionBy = replay.parts) ++ cdcActs ++
-        touched.map(p => s"""{"remove":{"path":${quote(p)}}}""") ++ schemaActs
+        touched.map(removeLine) ++ schemaActs
       // CHECK constraints gate the merged output (survivors + updates) —
       // one scan of the staged bytes, never the table; a violating update
       // aborts with nothing committed. The set is the derivation replay's;
@@ -1201,24 +1249,16 @@ object TxLog {
       // an admitted re-commit is always enforcement-current.
       enforceConstraints(spark, actions, replay.schema, replay.cons.toMap, "merge")
       val ourRemoves = touched.toSet
-      // Optimistic commit with DISJOINT-COMMIT ADMISSION (the Delta conflict
-      // rule, Armbrust et al. VLDB 2020 §3.2): when another writer wins the
-      // slot, re-deriving the whole merge is only NECESSARY if the winner
-      // could interact with it. If every winning commit since our base is
-      // provably independent — removed none of the files we rewrite, added
+      // ADMISSION proof (the Delta conflict rule, Armbrust et al. VLDB 2020
+      // §3.2): a winner that removed none of the files we rewrite, added
       // only files whose recorded key envelopes cannot hold an update key,
-      // changed no schema — then committing the SAME actions at the new tip
-      // IS the serial history "winners, then us", and the expensive file
-      // scoping + rewrite is not repeated. On a partitioned 100 TB table
-      // two merges on disjoint key ranges are the common case; each now
-      // pays exactly one derivation. Anything unprovable re-derives.
-      commitAdmitting(table, tip, actions, "merge", () => mergeCommitHook,
-        attempts, maxRetries,
+      // and changed no schema cannot interact with this merge, so the SAME
+      // actions re-commit past it and the expensive file scoping + rewrite
+      // is not repeated. On a partitioned 100 TB table two merges on
+      // disjoint key ranges are the common case; each pays one derivation.
+      publish(actions,
         v => commitIsDisjoint(table, v, ourRemoves, keyCol, keyType, updBounds, tzId))
-        .foreach(v => return v)
-      // an unprovable winner: loop re-derives against the fresh tip
     }
-    -1L
   }
 
   /** The key-envelope prune of the merge verbs (their phase 1) and of
@@ -1297,24 +1337,23 @@ object TxLog {
     *
     * Null keys follow SQL join semantics: a null-keyed source row matches
     * nothing (insert candidate); a null-keyed target row matches nothing
-    * (not-matched-by-source candidate). On version conflict the derivation
-    * re-runs against the fresh tip (no disjoint admission — a by-source
-    * clause interacts with every concurrent write by construction).
+    * (not-matched-by-source candidate). There is no disjoint admission: a
+    * by-source clause interacts with every concurrent write by construction.
     * `changeFeed = true` stages exact sidecars (pre/post images, deletes,
     * inserts) for [[readChangeFeed]]. Returns the committed version. */
   def mergeFull(source: DataFrame, table: String, keyCol: String,
       clauses: Seq[MergeClause], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false): Long =
+      changeFeed: Boolean = false): Long =
     materialized(source)(
-      mergeFullMapped(_, table, keyCol, clauses, statsCol, maxRetries, changeFeed))
+      mergeFullMapped(_, table, keyCol, clauses, statsCol, changeFeed))
 
   private def mergeFullMapped(source: DataFrame, table: String, keyCol: String,
       clauses: Seq[MergeClause], statsCol: Option[String],
-      maxRetries: Int, changeFeed: Boolean): Long = {
+      changeFeed: Boolean): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
-      return mergeFull0(source, table, keyCol, clauses, statsCol, maxRetries, changeFeed)
+      return mergeFull0(source, table, keyCol, clauses, statsCol, changeFeed)
     // COLUMN MAPPING boundary: source columns the table maps rename to
     // physical (source-ONLY columns keep their names — they exist only on
     // the `s.` side of the join); clause conditions, SET targets and SET
@@ -1343,12 +1382,12 @@ object TxLog {
       case NotMatchedBySourceUpdate(s, c) => NotMatchedBySourceUpdate(ts(s), c.map(tc))
     }
     mergeFull0(srcP, table, physFor(m, keyCol, resolver, "merge"), clausesP,
-      mapStatsCol(statsCol, m, resolver, "merge"), maxRetries, changeFeed)
+      mapStatsCol(statsCol, m, resolver, "merge"), changeFeed)
   }
 
   private def mergeFull0(source: DataFrame, table: String, keyCol: String,
-      clauses: Seq[MergeClause], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false): Long = {
+      clauses: Seq[MergeClause], statsCol: Option[String],
+      changeFeed: Boolean): Long = {
     require(clauses.nonEmpty, "mergeFull needs at least one clause")
     val spark = source.sparkSession
     val hasBySource = clauses.exists {
@@ -1357,13 +1396,11 @@ object TxLog {
     }
     val srcKeys = source.select(col(keyCol).as("__k"))
       .where(col("__k").isNotNull).distinct()
-    var attempt = 0
-    while (true) {
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    def derive(replay: Replay): Step[Long] = {
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
       val live = replay.live.keysIterator.toSeq
       if (live.isEmpty && !clauses.exists(_.isInstanceOf[NotMatchedInsert]))
-        return replay.tip
+        return Finish(replay.tip)
       // rewrite scope: everything under a by-source clause (inherent);
       // otherwise the files holding a source key (stats prune via the
       // recorded envelopes + key-column touch scan, as in merge)
@@ -1511,24 +1548,13 @@ object TxLog {
             .withColumn("_change_type", lit("insert"))
           stageCdcFiles(pre.unionByName(post).unionByName(dels).unionByName(ins), table)
         }
-      val removes = touched.map(p => s"""{"remove":{"path":${quote(p)}}}""")
       enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "merge")
-      try {
-        mergeCommitHook()
-        commit(table, replay.tip + 1, adds ++ cdcActs ++ removes, "merge")
-        maybeCheckpoint(table, replay.tip + 1)
-        return replay.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"mergeFull lost $maxRetries version races on $table")
-        // conservative: always re-derive (a by-source clause interacts
-        // with every concurrent commit; the non-by-source case could admit
-        // like merge, left to the fast-path verb)
-      }
+      // no admission: a lost race always re-derives (a by-source clause
+      // interacts with every concurrent commit; the non-by-source case
+      // could admit like merge, left to the fast-path verb)
+      publish(adds ++ cdcActs ++ touched.map(removeLine))
     }
-    -1L
+    transact(table, "merge", mergeCommitHook)(derive)
   }
 
   /** Is `v`'s commit provably independent of a merge that rewrites
@@ -1711,39 +1737,6 @@ object TxLog {
     if (dvs.isEmpty) base else base.where(Dv.liveRowFilter(spark, dvs))
   }
 
-  /** Optimistic commit loop with DISJOINT-COMMIT ADMISSION, shared by
-    * merge/delete/update: claims slots from `baseTip` + 1, advancing past
-    * winners `admits` proves independent (committing the SAME actions is
-    * then the serial history "winners, then us"). Returns Some(version) on
-    * success, None when an unprovable winner forces the caller to
-    * re-derive. `attempts` accumulates across re-derivations so the total
-    * race budget is `maxRetries`, not per-derivation. */
-  private def commitAdmitting(table: String, baseTip: Long, actions: Seq[String],
-      op: String, hook: () => (() => Unit),
-      attempts: java.util.concurrent.atomic.AtomicInteger, maxRetries: Int,
-      admits: Long => Boolean): Option[Long] = {
-    var base = baseTip
-    while (true) {
-      try {
-        // the hook FIELD is re-read per attempt (a test hook that replaces
-        // itself must not keep firing on retries), hence hook-of-hook
-        hook()()
-        commit(table, base + 1, actions, op)
-        maybeCheckpoint(table, base + 1)
-        return Some(base + 1)
-      } catch {
-        case _: VersionConflict =>
-          if (attempts.incrementAndGet() > maxRetries)
-            sys.error(s"$op lost $maxRetries version races on $table")
-          val newTip = latestVersion(table)
-          if ((base + 1 to newTip).forall(admits)) base = newTip
-          else return None
-        // staged files of a re-derived attempt stay unreferenced → vacuum
-      }
-    }
-    None
-  }
-
   /** Row-level transactional DELETE — the retraction half of the lakehouse
     * write surface (GDPR erasure, bad-batch retraction; the reference's own
     * append-only design names exactly this gap: ingest dedup by "most
@@ -1777,15 +1770,13 @@ object TxLog {
     * same gating as merge/overwrite (a delete's adds are rewritten survivor
     * rows, not new data).
     *
-    * On a version conflict, DISJOINT-COMMIT ADMISSION (the same Delta §3.2
-    * rule merge applies, with the stats test as the proof): when every
-    * winning commit removed none of our files, changed no schema or
-    * constraint, and added only files whose recorded stats PROVABLY
-    * exclude a predicate-matching row (`mayContain == false`), the SAME
-    * actions re-commit at the next slot — concurrent retention deletes and
-    * appends on disjoint key ranges each pay one derivation. Anything
-    * unprovable (stats-less adds, unrecognized predicate shapes) re-derives
-    * against the new tip, the conservative serializable path. `statsCol`
+    * DISJOINT-COMMIT ADMISSION (the same Delta §3.2 rule merge applies,
+    * with the stats test as the proof): a winner that removed none of our
+    * files, changed no schema or constraint, and added only files whose
+    * recorded stats PROVABLY exclude a predicate-matching row
+    * (`mayContain == false`) is admitted — concurrent retention deletes and
+    * appends on disjoint key ranges each pay one derivation. Stats-less
+    * adds and unrecognized predicate shapes are not provable. `statsCol`
     * re-records per-file min/max on the rewritten output so merges/pruned
     * reads keep pruning against post-delete files. Returns the committed
     * version. */
@@ -1821,26 +1812,23 @@ object TxLog {
   private[graft] val dvSwapFiles = new java.util.concurrent.atomic.AtomicLong(-1L)
 
   def delete(spark: SparkSession, table: String, predicate: Column,
-      statsCol: Option[String] = None, maxRetries: Int = 16,
+      statsCol: Option[String] = None,
       changeFeed: Boolean = false, useDV: Boolean = false,
       dvMaxFraction: Double = 0.5): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "delete")
     val resolver = spark.sessionState.conf.resolver
     delete0(spark, table, mapColumn(predicate, pre.colmap, resolver),
-      mapStatsCol(statsCol, pre.colmap, resolver, "delete"), maxRetries,
+      mapStatsCol(statsCol, pre.colmap, resolver, "delete"),
       changeFeed, useDV, dvMaxFraction)
   }
 
   private def delete0(spark: SparkSession, table: String, predicate: Column,
-      statsCol: Option[String] = None, maxRetries: Int = 16,
-      changeFeed: Boolean = false, useDV: Boolean = false,
-      dvMaxFraction: Double = 0.5): Long = {
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+      statsCol: Option[String], changeFeed: Boolean, useDV: Boolean,
+      dvMaxFraction: Double): Long = {
+    def derive(replay: Replay): Step[Long] = {
       deleteDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      if (replay.live.isEmpty) return replay.tip
+      if (replay.live.isEmpty) return Finish(replay.tip)
       val live = replay.live.keysIterator.toSeq
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
       // phase 0: log-stats candidate prune (zero data I/O) — a file whose
@@ -1853,7 +1841,7 @@ object TxLog {
       val tzId = spark.sessionState.conf.sessionLocalTimeZone
       val candidates = pruneByStats(live, replay, resolvedCond, tzId)
       deleteCandidateFiles.set(candidates.size)
-      if (candidates.isEmpty) return replay.tip
+      if (candidates.isEmpty) return Finish(replay.tip)
       // phase 0.5: WHOLE-FILE drops (Delta's fully-covered-file delete) —
       // a file whose stats PROVE every row satisfies the predicate
       // (envelope inside the TRUE region AND a recorded null count of zero
@@ -1887,7 +1875,7 @@ object TxLog {
           replay.live, predicate)
         else (touchScan(spark, reader, candidates.filterNot(covered),
           replay.live, predicate), Map.empty[String, org.roaringbitmap.RoaringBitmap])
-      if (covered.isEmpty && touched.isEmpty) return replay.tip
+      if (covered.isEmpty && touched.isEmpty) return Finish(replay.tip)
       val physRows: Map[String, Long] =
         if (!useDV || touched.isEmpty) Map.empty
         else {
@@ -1917,7 +1905,7 @@ object TxLog {
           case None => newBits(normalize(p))
         }
         val ref = Dv.write(table, merged)
-        (s"""{"remove":{"path":${quote(p)}}}""", withDvLine(replay.live(p), ref))
+        (removeLine(p), withDvLine(replay.live(p), ref))
       }
       // keep rows where the predicate is FALSE or NULL (SQL DELETE keeps
       // null-valued predicates — only TRUE rows go); covered files stage
@@ -1943,7 +1931,7 @@ object TxLog {
             .where(coalesce(predicate, lit(false)))
             .withColumn("_change_type", lit("delete")), table)
       val removes = covered.toSeq.map(removeAllDeletedLine) ++
-        rewriteTargets.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+        rewriteTargets.map(removeLine)
       val ourFiles = covered ++ touched
       // ORDER: removes precede adds so a same-path DV swap replays as
       // remove-then-add (replay's take() is order-sensitive per commit)
@@ -1953,13 +1941,10 @@ object TxLog {
         // feature — older/simpler engines must refuse, not resurrect
         (if (dvActs.isEmpty) Seq.empty
          else protocolBump(replay, Set("deletionVectors")))
-      commitAdmitting(table, replay.tip, actions, "delete",
-        () => deleteCommitHook, attempts, maxRetries,
+      publish(actions,
         v => commitIsDisjointForPredicate(table, v, ourFiles, resolvedCond, tzId))
-        .foreach(v => return v)
-      // an unprovable winner: loop re-derives against the fresh tip
     }
-    -1L
+    transact(table, "delete", deleteCommitHook)(derive)
   }
 
   /** Candidate-file count of the last update's touch scan (test/diagnostic
@@ -1998,15 +1983,14 @@ object TxLog {
     * violation, so the staged bytes are enforced before the commit
     * publishes. The commit's op is `"update"` — a rewrite op, gating
     * [[readChanges]] and the streaming source exactly like merge/delete.
-    * On a version conflict, the same DISJOINT-COMMIT ADMISSION as delete:
-    * a winner that removed none of our files, changed no schema or
-    * constraint, and added only files whose stats provably exclude a
-    * predicate-matching row lets the SAME actions re-commit; anything
-    * unprovable re-derives. `statsCol` re-records per-file min/max on the
+    * The same DISJOINT-COMMIT ADMISSION as delete: a winner that removed
+    * none of our files, changed no schema or constraint, and added only
+    * files whose stats provably exclude a predicate-matching row is
+    * admitted. `statsCol` re-records per-file min/max on the
     * rewritten output. Returns the committed version. */
   def update(spark: SparkSession, table: String, predicate: Column,
       set: Map[String, Column], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false,
+      changeFeed: Boolean = false,
       useDV: Boolean = false, dvMaxFraction: Double = 0.5): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "update")
@@ -2028,20 +2012,17 @@ object TxLog {
     }
     update0(spark, table, mapColumn(predicate, pre.colmap, resolver),
       setP.toMap,
-      mapStatsCol(statsCol, pre.colmap, resolver, "update"), maxRetries,
+      mapStatsCol(statsCol, pre.colmap, resolver, "update"),
       changeFeed, useDV, dvMaxFraction)
   }
 
   private def update0(spark: SparkSession, table: String, predicate: Column,
-      set: Map[String, Column], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false,
-      useDV: Boolean = false, dvMaxFraction: Double = 0.5): Long = {
+      set: Map[String, Column], statsCol: Option[String], changeFeed: Boolean,
+      useDV: Boolean, dvMaxFraction: Double): Long = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+    def derive(replay: Replay): Step[Long] = {
       updateDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      if (replay.live.isEmpty) return replay.tip
+      if (replay.live.isEmpty) return Finish(replay.tip)
       val live = replay.live.keysIterator.toSeq
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
       val tableDf = reader.parquet(live: _*)
@@ -2093,12 +2074,15 @@ object TxLog {
       val tzId = spark.sessionState.conf.sessionLocalTimeZone
       val candidates = pruneByStats(live, replay, resolvedCond, tzId)
       updateCandidateFiles.set(candidates.size)
-      if (candidates.isEmpty) return replay.tip
+      if (candidates.isEmpty) return Finish(replay.tip)
       val (touched, newBits) =
         if (useDV) dvTouch(spark, reader, candidates, replay.live, predicate)
         else (touchScan(spark, reader, candidates, replay.live, predicate),
           Map.empty[String, org.roaringbitmap.RoaringBitmap])
-      if (touched.isEmpty) return replay.tip
+      if (touched.isEmpty) return Finish(replay.tip)
+      val ourFiles = touched.toSet
+      val admits = (v: Long) =>
+        commitIsDisjointForPredicate(table, v, ourFiles, resolvedCond, tzId)
       // DELETION-VECTOR path (opt-in, ALL-OR-NOTHING per commit): the
       // updated rows append as fresh POSTIMAGE-ONLY files and their old
       // versions mask via per-file bitmaps — O(updated rows), never a
@@ -2108,106 +2092,88 @@ object TxLog {
       // rewrite-path file in the same commit would make its adds
       // indistinguishable mixed rows. A file over `dvMaxFraction` fails
       // the whole commit over to the rewrite path below.
-      var dvFellBack = !useDV
-      val dvDone: Option[Long] =
-        if (!useDV) None
-        else {
-          val recorded = touched.flatMap(p =>
-            parseRows(replay.live(p)).map(p -> _)).toMap
-          val physRows = recorded ++
-            footerRowCounts(spark, touched.filterNot(recorded.contains))
-          val allOk = touched.forall { p =>
-            (newBits.get(normalize(p)), physRows.get(p)) match {
-              case (Some(b), Some(n)) if n > 0 =>
-                (parseDv(replay.live(p)).map(_.card).getOrElse(0L) +
-                  b.getLongCardinality).toDouble / n <= dvMaxFraction
-              case _ => false
-            }
-          }
-          if (!allOk) { dvFellBack = true; None }
-          else {
-            dvSwapFiles.set(touched.size)
-            // postimage rows: assignments apply UNCONDITIONALLY (every row
-            // here is predicate-TRUE), projected back to the table schema;
-            // generated columns recompute over the post image
-            val hits = readLive(spark, reader, touched, replay.live)
-              .where(coalesce(predicate, lit(false)))
-            val post = recomputeGenerated(hits.select(tableSchema.fields.map { f =>
-              assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-            }.toSeq: _*), replay.gens)
-            val adds = stageFiles(post, table, statsCol, replay.parts)
-            val dvActs = touched.map { p =>
-              val merged = parseDv(replay.live(p)) match {
-                case Some(old) => org.roaringbitmap.RoaringBitmap.or(
-                  Dv.read(old.path), newBits(normalize(p)))
-                case None => newBits(normalize(p))
-              }
-              val ref = Dv.write(table, merged)
-              (s"""{"remove":{"path":${quote(p)}}}""",
-                withDvLine(replay.live(p), ref))
-            }
-            // the fresh adds are exactly the NEW row versions — enforcement
-            // on them covers everything this commit changes
-            enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
-            // no sidecars even with changeFeed: the feed derives a pure-DV
-            // update exactly (and for free) from the bitmap diff + adds
-            val actions = dvActs.map(_._1) ++ dvActs.map(_._2) ++ adds ++
-              (if (dvActs.isEmpty) Seq.empty
-               else protocolBump(replay, Set("deletionVectors")))
-            commitAdmitting(table, replay.tip, actions, "update",
-              () => updateCommitHook, attempts, maxRetries,
-              v => commitIsDisjointForPredicate(table, v, touched.toSet,
-                resolvedCond, tzId))
+      if (useDV) {
+        val recorded = touched.flatMap(p =>
+          parseRows(replay.live(p)).map(p -> _)).toMap
+        val physRows = recorded ++
+          footerRowCounts(spark, touched.filterNot(recorded.contains))
+        val allOk = touched.forall { p =>
+          (newBits.get(normalize(p)), physRows.get(p)) match {
+            case (Some(b), Some(n)) if n > 0 =>
+              (parseDv(replay.live(p)).map(_.card).getOrElse(0L) +
+                b.getLongCardinality).toDouble / n <= dvMaxFraction
+            case _ => false
           }
         }
-      dvDone.foreach(v => return v)
-      if (dvFellBack) {
-        // rewrite path (the default, and the DV fallback): ONE Project over
-        // the old LIVE rows — TRUE rows take the SET expressions (all
-        // evaluated against the old row), FALSE/NULL rows pass through.
-        // GENERATED columns RECOMPUTE on hit rows only, over the POST
-        // image (a second Project stage carrying a __hit flag: the SET may
-        // change both the rule's inputs and the predicate's) — miss rows
-        // keep their stored value, so pre-rule nulls are never backfilled.
-        val stage1 = readLive(spark, reader, touched, replay.live)
-          .withColumn("__hit", coalesce(predicate, lit(false)))
-          .select((tableSchema.fields.map { f =>
-            assigns.get(f.name) match {
-              case Some(v) =>
-                when(col("__hit"), v).otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
+        if (allOk) {
+          dvSwapFiles.set(touched.size)
+          // postimage rows: assignments apply UNCONDITIONALLY (every row
+          // here is predicate-TRUE), projected back to the table schema;
+          // generated columns recompute over the post image
+          val hits = readLive(spark, reader, touched, replay.live)
+            .where(coalesce(predicate, lit(false)))
+          val post = recomputeGenerated(hits.select(tableSchema.fields.map { f =>
+            assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+          }.toSeq: _*), replay.gens)
+          val adds = stageFiles(post, table, statsCol, replay.parts)
+          val dvActs = touched.map { p =>
+            val merged = parseDv(replay.live(p)) match {
+              case Some(old) => org.roaringbitmap.RoaringBitmap.or(
+                Dv.read(old.path), newBits(normalize(p)))
+              case None => newBits(normalize(p))
             }
-          } :+ col("__hit")).toSeq: _*)
-        val updated = replay.gens.foldLeft(stage1) { case (d, (c, e)) =>
-          d.withColumn(c, when(col("__hit"), expr(e)).otherwise(col(c)))
-        }.drop("__hit")
-        val adds = stageFiles(updated, table, statsCol, replay.parts)
-        // change-data sidecars (opt-in): old and new images of exactly the
-        // rows the predicate hit — the assignments apply UNCONDITIONALLY to
-        // the post frame because every row in it is a TRUE row
-        val cdcActs =
-          if (!changeFeed) Seq.empty
-          else {
-            val hit = readLive(spark, reader, touched, replay.live)
-              .where(coalesce(predicate, lit(false)))
-            val pre = hit.withColumn("_change_type", lit("update_preimage"))
-            val post = recomputeGenerated(hit.select(tableSchema.fields.map { f =>
-              assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-            }.toSeq: _*), replay.gens)
-              .withColumn("_change_type", lit("update_postimage"))
-            stageCdcFiles(pre.unionByName(post), table)
+            val ref = Dv.write(table, merged)
+            (removeLine(p), withDvLine(replay.live(p), ref))
           }
-        val removes = touched.map(p => s"""{"remove":{"path":${quote(p)}}}""")
-        enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
-        val ourFiles = touched.toSet
-        commitAdmitting(table, replay.tip, removes ++ adds ++ cdcActs, "update",
-          () => updateCommitHook, attempts, maxRetries,
-          v => commitIsDisjointForPredicate(table, v, ourFiles, resolvedCond, tzId))
-          .foreach(v => return v)
+          // the fresh adds are exactly the NEW row versions — enforcement
+          // on them covers everything this commit changes
+          enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
+          // no sidecars even with changeFeed: the feed derives a pure-DV
+          // update exactly (and for free) from the bitmap diff + adds
+          return publish(dvActs.map(_._1) ++ dvActs.map(_._2) ++ adds ++
+            (if (dvActs.isEmpty) Seq.empty
+             else protocolBump(replay, Set("deletionVectors"))), admits)
+        }
       }
-      // an unprovable winner: loop re-derives against the fresh tip
+      // rewrite path (the default, and the DV fallback): ONE Project over
+      // the old LIVE rows — TRUE rows take the SET expressions (all
+      // evaluated against the old row), FALSE/NULL rows pass through.
+      // GENERATED columns RECOMPUTE on hit rows only, over the POST
+      // image (a second Project stage carrying a __hit flag: the SET may
+      // change both the rule's inputs and the predicate's) — miss rows
+      // keep their stored value, so pre-rule nulls are never backfilled.
+      val stage1 = readLive(spark, reader, touched, replay.live)
+        .withColumn("__hit", coalesce(predicate, lit(false)))
+        .select((tableSchema.fields.map { f =>
+          assigns.get(f.name) match {
+            case Some(v) =>
+              when(col("__hit"), v).otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        } :+ col("__hit")).toSeq: _*)
+      val updated = replay.gens.foldLeft(stage1) { case (d, (c, e)) =>
+        d.withColumn(c, when(col("__hit"), expr(e)).otherwise(col(c)))
+      }.drop("__hit")
+      val adds = stageFiles(updated, table, statsCol, replay.parts)
+      // change-data sidecars (opt-in): old and new images of exactly the
+      // rows the predicate hit — the assignments apply UNCONDITIONALLY to
+      // the post frame because every row in it is a TRUE row
+      val cdcActs =
+        if (!changeFeed) Seq.empty
+        else {
+          val hit = readLive(spark, reader, touched, replay.live)
+            .where(coalesce(predicate, lit(false)))
+          val pre = hit.withColumn("_change_type", lit("update_preimage"))
+          val post = recomputeGenerated(hit.select(tableSchema.fields.map { f =>
+            assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
+          }.toSeq: _*), replay.gens)
+            .withColumn("_change_type", lit("update_postimage"))
+          stageCdcFiles(pre.unionByName(post), table)
+        }
+      enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
+      publish(touched.map(removeLine) ++ adds ++ cdcActs, admits)
     }
-    -1L
+    transact(table, "update", updateCommitHook)(derive)
   }
 
   /** Row-level CHANGE FEED over a version range — the batch CDF read that
@@ -2567,34 +2533,21 @@ object TxLog {
     * the future, and is a metadata no-op commit when the states already
     * agree. The restored-to files must not have been vacuumed (same
     * retention rule as time travel). Returns the new version. */
-  def restore(table: String, version: Long, maxRetries: Int = 16): Long = {
+  def restore(table: String, version: Long): Long = {
     require(version >= 1, s"cannot restore to version $version")
-    requireWritable(replayAdds(table, Long.MaxValue, useCheckpoint = true),
-      table, "restore")
-    var attempt = 0
-    while (true) {
-      val cur = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    transact(table, "restore") { cur =>
+      requireWritable(cur, table, "restore")
       require(version <= cur.tip,
         s"cannot restore $table to future version $version (tip ${cur.tip})")
       val target = replayAdds(table, version, useCheckpoint = true)
       val adds = target.live.valuesIterator.toSeq
       val removes = (cur.live.keySet -- target.live.keySet)
-        .map(p => s"""{"remove":{"path":${quote(p)}}}""").toSeq
+        .map(removeLine).toSeq
       // the restored schema rides along: readers of the new tip must see
       // the OLD shape again (a post-restore append re-enforces against it)
       val schemaActs = target.schema.filterNot(cur.schema.contains).map(schemaLine).toSeq
-      try {
-        commit(table, cur.tip + 1, adds ++ removes ++ schemaActs, "restore")
-        maybeCheckpoint(table, cur.tip + 1)
-        return cur.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"restore lost $maxRetries version races on $table")
-      }
+      publish(adds ++ removes ++ schemaActs)
     }
-    -1L
   }
 
   /** CONVERT TO TXLOG (Delta's CONVERT TO DELTA): adopt an EXISTING
@@ -2704,7 +2657,7 @@ object TxLog {
     * alternative, scanning the restored snapshot, is available by calling
     * addConstraint again after the restore). */
   def addConstraint(spark: SparkSession, table: String, name: String,
-      exprSql: String, maxRetries: Int = 16): Long = {
+      exprSql: String): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "addConstraint")
     // COLUMN MAPPING: the caller writes the CHECK in logical names; the
@@ -2723,9 +2676,9 @@ object TxLog {
           }.getOrElse(a)
       }.sql
     val pred = expr(storedSql) // malformed expressions fail HERE, loudly
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    // validation runs per derivation: a concurrently appended row that
+    // violates must block the constraint
+    transact(table, "addConstraint") { r =>
       if (r.live.nonEmpty) {
         val reader = r.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
         val bad = reader.parquet(r.live.keysIterator.toSeq: _*)
@@ -2733,20 +2686,8 @@ object TxLog {
         if (bad > 0) throw new ConstraintViolation(
           s"cannot add CHECK constraint $name ($exprSql) on $table: existing rows violate it")
       }
-      try {
-        commit(table, r.tip + 1, Seq(constraintLine(name, storedSql)), "addConstraint")
-        maybeCheckpoint(table, r.tip + 1)
-        return r.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"addConstraint lost $maxRetries version races on $table")
-        // re-validates against the fresh tip on retry — a concurrently
-        // appended row that violates must block the constraint
-      }
+      publish(Seq(constraintLine(name, storedSql)))
     }
-    -1L
   }
 
   // ==== COLUMN MAPPING verbs (the Delta column-mapping surface): RENAME
@@ -2762,17 +2703,16 @@ object TxLog {
     * physical for every current column) plus the protocol feature gate.
     * No-op when already mapped. RENAME/DROP/ADD COLUMN auto-enable, so
     * calling this explicitly is only needed to stamp the protocol early. */
-  def enableColumnMapping(table: String, maxRetries: Int = 16): Long =
-    alterMapping(table, "enableColumnMapping", maxRetries) { (r, m) =>
+  def enableColumnMapping(table: String): Long =
+    alterMapping(table, "enableColumnMapping") { (r, m) =>
       (m, Seq.empty)
     }
 
   /** RENAME a column — a metadata-only commit (Delta needs column mapping
     * for exactly this). Old files keep their physical bytes; every read
     * from this version on presents the new logical name. */
-  def renameColumn(table: String, oldName: String, newName: String,
-      maxRetries: Int = 16): Long =
-    alterMapping(table, "renameColumn", maxRetries) { (r, m) =>
+  def renameColumn(table: String, oldName: String, newName: String): Long =
+    alterMapping(table, "renameColumn") { (r, m) =>
       val resolver = caseInsensitiveResolver
       val idx = m.indexWhere { case (l, _) => resolver(l, oldName) }
       if (idx < 0) throw new SchemaMismatch(
@@ -2789,9 +2729,8 @@ object TxLog {
     * leaves the logical schema. Refused for partition columns and for
     * columns a CHECK constraint still references (drop those first —
     * Delta refuses the same way). */
-  def dropColumn(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 16): Long =
-    alterMapping(table, "dropColumn", maxRetries) { (r, m) =>
+  def dropColumn(spark: SparkSession, table: String, name: String): Long =
+    alterMapping(table, "dropColumn") { (r, m) =>
       val resolver = caseInsensitiveResolver
       val idx = m.indexWhere { case (l, _) => resolver(l, name) }
       if (idx < 0) throw new SchemaMismatch(
@@ -2837,9 +2776,8 @@ object TxLog {
     * because the fresh physical name is unique against every name the
     * schema has ever recorded). */
   def addColumn(table: String, name: String,
-      dataType: org.apache.spark.sql.types.DataType,
-      maxRetries: Int = 16): Long =
-    alterMapping(table, "addColumn", maxRetries) { (r, m) =>
+      dataType: org.apache.spark.sql.types.DataType): Long =
+    alterMapping(table, "addColumn") { (r, m) =>
       val (entry, acts) = newColumnActs(r, m, name, dataType, "addColumn")
       (m :+ entry, acts)
     }
@@ -2852,9 +2790,8 @@ object TxLog {
     * changing a rule's inputs refreshes the derived value. Rows written
     * BEFORE the rule existed null-fill on read, like any added column. */
   def addGeneratedColumn(spark: SparkSession, table: String, name: String,
-      dataType: org.apache.spark.sql.types.DataType, exprSql: String,
-      maxRetries: Int = 16): Long =
-    alterMapping(table, "addGeneratedColumn", maxRetries,
+      dataType: org.apache.spark.sql.types.DataType, exprSql: String): Long =
+    alterMapping(table, "addGeneratedColumn",
         bumpWriter = Set("generatedColumns")) { (r, m) =>
       val resolver = caseInsensitiveResolver
       val (entry, acts) = newColumnActs(r, m, name, dataType, "addGeneratedColumn")
@@ -2911,19 +2848,17 @@ object TxLog {
   private def caseInsensitiveResolver: (String, String) => Boolean =
     (a, b) => a.equalsIgnoreCase(b)
 
-  /** Shared ALTER loop: replay → writable gate → auto-enable mapping
+  /** Shared ALTER derivation: writable gate → auto-enable mapping
     * (identity over the recorded schema) → apply `f` (new mapping, extra
-    * actions) → commit mapping + protocol bump, optimistic-retried.
+    * actions) → commit mapping + protocol bump as op `"alter"`.
     * `bumpWriter` stamps EXTRA writer-only features beyond columnMapping
     * (e.g. generatedColumns — readable by any engine since values are
     * materialized, but a writer that ignores the rule lines would violate
     * GENERATED ALWAYS, so it must be fenced out). */
-  private def alterMapping(table: String, op: String, maxRetries: Int,
+  private def alterMapping(table: String, op: String,
       bumpWriter: Set[String] = Set.empty)(
-      f: (Replay, Seq[(String, String)]) => (Seq[(String, String)], Seq[String])): Long = {
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+      f: (Replay, Seq[(String, String)]) => (Seq[(String, String)], Seq[String])): Long =
+    transact(table, "alter") { r =>
       requireWritable(r, table, op)
       val base =
         if (r.colmap.nonEmpty) r.colmap
@@ -2934,43 +2869,17 @@ object TxLog {
       val (m, extra) = f(r, base)
       val acts = (if (m == r.colmap) Seq.empty else Seq(colmapLine(m))) ++
         extra ++ protocolBump(r, Set("columnMapping"), bumpWriter)
-      if (acts.isEmpty) return r.tip // already in the asked-for state
-      try {
-        commit(table, r.tip + 1, acts, "alter")
-        maybeCheckpoint(table, r.tip + 1)
-        return r.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"$op lost $maxRetries version races on $table")
-      }
+      if (acts.isEmpty) Finish(r.tip) // already in the asked-for state
+      else publish(acts)
     }
-    -1L // unreachable
-  }
 
   /** Drop a recorded CHECK constraint (a metadata commit; unknown names are
     * a no-op commit so drops are idempotent). */
-  def dropConstraint(table: String, name: String, maxRetries: Int = 16): Long = {
-    requireWritable(replayAdds(table, Long.MaxValue, useCheckpoint = true),
-      table, "dropConstraint")
-    var attempt = 0
-    while (true) {
-      val tip = latestVersion(table)
-      try {
-        commit(table, tip + 1,
-          Seq(s"""{"dropConstraint":{"name":${quote(name)}}}"""), "dropConstraint")
-        maybeCheckpoint(table, tip + 1)
-        return tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"dropConstraint lost $maxRetries version races on $table")
-      }
+  def dropConstraint(table: String, name: String): Long =
+    transact(table, "dropConstraint") { r =>
+      requireWritable(r, table, "dropConstraint")
+      publish(Seq(s"""{"dropConstraint":{"name":${quote(name)}}}"""))
     }
-    -1L
-  }
 
   /** The table's current CHECK constraints, name → expression. */
   def constraints(table: String): Map[String, String] =
@@ -3168,8 +3077,7 @@ object TxLog {
     * are read in one distributed scan, optionally Z-ordered (2-column
     * [[graft.ops.Layout.zorderBy]] clustering so later range predicates on
     * either column prune files), written as ceil(totalBytes/targetBytes)
-    * files, and swapped in a single optimistic commit (re-derived against
-    * the fresh tip on conflict, like merge). `statsCol` re-records per-file
+    * files, and swapped in one commit. `statsCol` re-records per-file
     * min/max so file-scoped MERGE keeps pruning against compacted output.
     * `where` bounds the compaction to files whose recorded stats MAY hold
     * a matching row (Delta's scoped OPTIMIZE) — "compact yesterday's
@@ -3179,27 +3087,23 @@ object TxLog {
   def optimize(spark: SparkSession, table: String,
       targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 2,
       zorder: Option[(String, String)] = None, statsCol: Option[String] = None,
-      maxRetries: Int = 16, where: Option[Column] = None): Long = {
+      where: Option[Column] = None): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "optimize")
     if (pre.colmap.isEmpty)
-      return optimize0(spark, table, targetBytes, minFiles, zorder, statsCol,
-        maxRetries, where)
+      return optimize0(spark, table, targetBytes, minFiles, zorder, statsCol, where)
     val resolver = spark.sessionState.conf.resolver
     optimize0(spark, table, targetBytes, minFiles,
       zorder.map { case (a, b) => (physFor(pre.colmap, a, resolver, "optimize"),
         physFor(pre.colmap, b, resolver, "optimize")) },
-      mapStatsCol(statsCol, pre.colmap, resolver, "optimize"), maxRetries,
+      mapStatsCol(statsCol, pre.colmap, resolver, "optimize"),
       where.map(mapColumn(_, pre.colmap, resolver)))
   }
 
-  private def optimize0(spark: SparkSession, table: String,
-      targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 2,
-      zorder: Option[(String, String)] = None, statsCol: Option[String] = None,
-      maxRetries: Int = 16, where: Option[Column] = None): Long = {
-    var attempt = 0
-    while (true) {
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+  private def optimize0(spark: SparkSession, table: String, targetBytes: Long,
+      minFiles: Int, zorder: Option[(String, String)], statsCol: Option[String],
+      where: Option[Column]): Long = {
+    def derive(replay: Replay): Step[Long] = {
       // DV'd files are candidates REGARDLESS of size: compaction is where
       // deletion vectors get absorbed (the rewrite drops masked rows and
       // the output carries no DV) — Delta's OPTIMIZE does exactly this
@@ -3226,8 +3130,8 @@ object TxLog {
       // with nothing to merge it with); the minFiles economy test applies
       // only to the pure small-file case
       val anyDv = candidates.exists(p => parseDv(replay.live(p)).isDefined)
-      if (candidates.size < math.max(2, minFiles) && !anyDv) return 0L
-      if (candidates.isEmpty) return 0L
+      if (candidates.size < math.max(2, minFiles) && !anyDv) return Finish(0L)
+      if (candidates.isEmpty) return Finish(0L)
       val totalBytes = candidates.map(p => Files.size(Paths.get(p))).sum
       val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
       val df = readLive(spark,
@@ -3237,21 +3141,10 @@ object TxLog {
         case Some((x, y)) => graft.ops.Layout.zorderBy(df, col(x), col(y), nOut)
         case None         => df.repartition(nOut)
       }
-      val adds = stageFiles(packed, table, statsCol, replay.parts)
-      val removes = candidates.map(p => s"""{"remove":{"path":${quote(p)}}}""")
-      try {
-        commit(table, replay.tip + 1, adds ++ removes, "optimize")
-        maybeCheckpoint(table, replay.tip + 1)
-        return replay.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"optimize lost $maxRetries version races on $table")
-        // staged files of the failed attempt stay unreferenced → vacuum
-      }
+      publish(stageFiles(packed, table, statsCol, replay.parts) ++
+        candidates.map(removeLine))
     }
-    -1L
+    transact(table, "optimize")(derive)
   }
 
   /** Latest committed streaming-transaction version for `appId`, or None if
@@ -3281,15 +3174,17 @@ object TxLog {
     * committed for `appId` (the staged files of a skipped attempt stay
     * unreferenced and are vacuum's to collect, like any failed writer). */
   def appendIdempotent(df: DataFrame, table: String, appId: String,
-      txnVersion: Long, maxRetries: Int = 64,
-      statsCol: Option[String] = None, mergeSchema: Boolean = false): Option[Long] = {
+      txnVersion: Long, statsCol: Option[String] = None,
+      mergeSchema: Boolean = false): Option[Long] = {
     if (lastTxnVersion(table, appId).exists(_ >= txnVersion)) return None
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "append")
     // COLUMN MAPPING boundary, same discipline as append (the streaming
-    // sink path must stage physical names too); new columns refuse rather
-    // than evolve — a streaming micro-batch is the wrong place for silent
-    // schema evolution, and the sink never passes mergeSchema anyway
+    // sink path must stage physical names too); columns the mapping does
+    // not know refuse rather than extend it — a streaming micro-batch is
+    // the wrong place for silent mapping evolution. `mergeSchema` (the
+    // txlog sink passes its option through) still evolves the schema of
+    // an unmapped table, as in append.
     val resolver = df.sparkSession.sessionState.conf.resolver
     val dfP = {
       val p = toPhysicalDf(df, pre.colmap, "append")
@@ -3297,35 +3192,23 @@ object TxLog {
       computeGenerated(p, pre.gens)
     }
     val statsColP = mapStatsCol(statsCol, pre.colmap, resolver, "append")
-    val actions = stageFiles(dfP, table, statsColP) :+ txnLine(appId, txnVersion)
-    var attempt = 0
+    // a partitioned table's files stage under its recorded spec, value-pure
+    // per file like append's, so pruning and whole-file drops see them
+    val actions = stageFiles(dfP, table, statsColP, pre.parts) :+
+      txnLine(appId, txnVersion)
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      if (r.txns.get(appId).exists(_ >= txnVersion)) return None
-      // same staleness rule as append (pure extensions are harmless; this
-      // path never extends the mapping itself)
-      if (r.colmap != pre.colmap && !pre.colmap.forall(r.colmap.contains))
-        sys.error(s"append: column mapping of $table changed concurrently")
-      val cmap = r.cons.toMap
-      if (!enforcedFor.contains(cmap)) {
-        enforceConstraints(df.sparkSession, actions, r.schema, cmap, "append")
-        enforcedFor = Some(cmap)
-      }
-      if (r.gens != pre.gens)
-        sys.error(s"append: generated-column rules of $table changed concurrently")
-      try {
-        commit(table, r.tip + 1, actions ++ schemaActions(r, dfP, mergeSchema, "append"), "append")
-        maybeCheckpoint(table, r.tip + 1)
-        return Some(r.tip + 1)
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"idempotent append lost $maxRetries version races on $table")
+    transact[Option[Long]](table, "append") { r =>
+      if (r.txns.get(appId).exists(_ >= txnVersion)) Finish(None)
+      else {
+        val cmap = r.cons.toMap
+        if (!enforcedFor.contains(cmap)) {
+          enforceConstraints(df.sparkSession, actions, r.schema, cmap, "append")
+          enforcedFor = Some(cmap)
+        }
+        requireStagedCurrent(r, pre, pre.parts, extendsMapping = false, table)
+        Publish(actions ++ schemaActions(r, dfP, mergeSchema, "append"), Some(_))
       }
     }
-    None // unreachable
   }
 
   /** One replayed commit for log tailing: the version, the operation that
